@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from nlp_lib_spark.lexicons import TESTDATA_CONFIG
+from nlp_lib_spark.operators.dedup import SEMDEDUP_N_CENTROIDS
 from nlp_lib_spark.operators.extract import (annotate_turns, extract_triples,
                                              mentions_from_annotations)
 from nlp_lib_spark.operators.viewsql import sql_over
@@ -2888,13 +2889,14 @@ SELECT query_id, neighbor_id, sim FROM (
 """
 
 
-def _semdedup_oracle_sql(n_centroids: int = 16, iters: int = 2,
-                         scale: int = 1000, threshold: float = 0.3,
+def _semdedup_oracle_sql(n_centroids: int = SEMDEDUP_N_CENTROIDS,
+                         iters: int = 2, scale: int = 1000,
+                         threshold: float = 0.3,
                          cluster_cap: int = 1000) -> str:
     """DuckDB replica of SemDeDup (operators/dedup.semdedup_pairs): the
     shared Lloyd prefix, a per-cluster min-id row_number cap, then the
-    keep-first-by-id duplicate election — one row per dropped vector
-    with its best kept match."""
+    chain-semantics duplicate election — one row per dropped vector with
+    its best-matching earlier vector."""
     prefix, _ = _kmeans_cells_cte_sql(n_centroids, iters, scale)
     return prefix + f""",
 capped AS (
@@ -2928,8 +2930,8 @@ SELECT query_id, neighbor_id, sim FROM (
 def q_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup semantic pruning (operators/dedup.semdedup_pairs):
     k-means clusters from the shared exact-integer Lloyd loop, then
-    keep-first-by-id within-cluster cosine dedup — one certified row per
-    dropped vector (dropped id, kept representative, similarity), the
+    chain-semantics within-cluster cosine dedup — one certified row per
+    dropped vector (dropped id, best-matching earlier id, similarity), the
     ann schema so the gate unions into ann_variants.  The per-cluster
     row_number cap (mirrored in the oracle) is the mega-cluster bound:
     the pair stage can never exceed cluster_cap^2 rows per cluster."""

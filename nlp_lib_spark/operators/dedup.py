@@ -30,6 +30,9 @@ from nlp_lib_spark.operators.viewsql import sql_over, unique_view
 
 _N_HASHES = 8
 _N_PLANES = 8
+# SemDeDup k-means size, shared by the operator, its DuckDB oracle and the
+# pure-Python replica in the tests
+SEMDEDUP_N_CENTROIDS = 16
 
 def _sql(df: DataFrame, sql: str) -> DataFrame:
     """Run SQL against ``df`` via a unique, immediately-dropped temp view
@@ -530,7 +533,8 @@ SELECT query_id, neighbor_id, CAST(sim AS DOUBLE) AS sim FROM (
 
 
 def semdedup_pairs(df: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding", n_centroids: int = 16,
+                   vec_col: str = "embedding",
+                   n_centroids: int = SEMDEDUP_N_CENTROIDS,
                    iters: int = 2, scale: int = 1000,
                    threshold: float = 0.3,
                    cluster_cap: int = 1000) -> DataFrame:
@@ -538,13 +542,16 @@ def semdedup_pairs(df: DataFrame, id_col: str = "vec_id",
     k-means-cluster the embedding space, then drop any vector whose
     cosine to an EARLIER (lower-id) vector in the same cluster clears
     ``threshold``.  Emits one row per dropped vector: ``(query_id = the
-    dropped vec, neighbor_id = the kept earlier vec it best matches,
-    sim)`` — the ann-gate schema, so the gate unions into ann_variants.
+    dropped vec, neighbor_id = the earlier vec it best matches, sim)`` —
+    the ann-gate schema, so the gate unions into ann_variants.
 
-    Keep-first-by-id is the deterministic stand-in for the paper's
-    "keep one representative per semantic-duplicate set"; min-id
-    election matches the exact-dedup and neardup_clusters keeper
-    convention repo-wide.
+    Chain semantics: every earlier vec in the (capped) cluster is a
+    candidate neighbor, including one that is itself dropped, so
+    ``neighbor_id`` need not be a kept vec (a -> b -> c chains drop both
+    b and c even when c is not similar to a).  A vec survives iff no
+    earlier vec of its capped cluster clears the threshold against it,
+    so the min-id vec of every cluster survives — the exact-dedup and
+    neardup_clusters min-id keeper convention repo-wide.
 
     Scale shape: the quantizer is the shared exact-integer Lloyd loop
     (_kmeans_lloyd — k x dim centroid aggregates are the only driver
