@@ -1320,20 +1320,18 @@ def q_kg_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sessionization certified against the SAME oracle as the
     batch gate: Spark's merging ``session_window`` under an event-time
     watermark (streaming/ingest.stream_sessions), drained one file per
-    micro-batch, append mode.  A far-future flush-sentinel file written
-    LAST advances the watermark so every real session finalizes before
-    the drain ends (the sentinel's own never-finalized session is
-    filtered); ``window.end - gap`` recovers the batch convention
+    micro-batch, append mode.  Flush-sentinel files written LAST and
+    dated from the data's own event-time range
+    (streaming/ingest.write_session_flush) advance the watermark so every
+    real session finalizes before the drain ends (the sentinels' sessions
+    are filtered); ``window.end - gap`` recovers the batch convention
     ``session_end = max(ts)``.  A hash match proves the native streaming
     session semantics equal the batch islands partition exactly."""
     import shutil
     import tempfile
     import uuid
 
-    from pyspark.sql import functions as F
-
-    from nlp_lib_spark.streaming.ingest import (SESSION_FLUSH_CONV,
-                                                run_stream_sessions_once)
+    from nlp_lib_spark.streaming.ingest import run_stream_sessions_once
     register_views(spark, sf_dir)
     synth = spark.sql(_session_synth_sql("spark"))
     in_dir = tempfile.mkdtemp(prefix="kgx_stream_sessions_")
@@ -1344,30 +1342,6 @@ def q_kg_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and each extra stateful micro-batch costs ~3.5 s of state-store
         # round-trips at sf0.1 — 4 files measured 21-24 s vs ~14 s
         synth.repartition(2).write.mode("overwrite").parquet(in_dir)
-        # TWO staggered sentinel files (later mtimes => later micro-
-        # batches): the first advances the watermark past every real
-        # session, the second runs a batch UNDER that watermark and
-        # flushes them — append-mode emission lags the watermark by one
-        # batch, and the trailing no-data batch that would otherwise
-        # flush is not guaranteed under availableNow (observed: 187/234
-        # sessions with a single sentinel).  FileStreamSource orders by
-        # mtime, so the sentinels' mtimes are stamped explicitly (+2 s /
-        # +4 s past every data file) instead of sleeping between writes.
-        import glob
-        import os
-        seen = set(glob.glob(f"{in_dir}/*.parquet"))
-        t_max = max(os.path.getmtime(f) for f in seen)
-        for step, sentinel_ts in enumerate(
-                ("2035-01-01 00:00:00", "2035-01-01 01:00:00"), start=1):
-            spark.createDataFrame(
-                [(SESSION_FLUSH_CONV,)], "conv_id string") \
-                .select("conv_id",
-                        F.lit(sentinel_ts).cast("timestamp").alias("ts")) \
-                .coalesce(1).write.mode("append").parquet(in_dir)
-            now = set(glob.glob(f"{in_dir}/*.parquet"))
-            for f in now - seen:
-                os.utime(f, (t_max + 2 * step, t_max + 2 * step))
-            seen = now
         # state-store parallelism: session-window state costs scale with
         # (state partitions x micro-batches), and 1840 open sessions
         # need nowhere near 32 state partitions — 8 measured ~3x faster
@@ -1491,6 +1465,20 @@ def _minhash_cols(dialect: str) -> str:
     tmpl = "list_min(list_transform({sh}, s -> substr(md5(s), {off}, 4))) AS mh{h}"
     return ",\n       ".join(tmpl.format(sh=sh, h=h, off=1 + 4 * h)
                              for h in range(_N_HASHES))
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to defaultParallelism*2 ahead of a heavy
+    row-local stage. A single-file parquet scan yields ONE split, which
+    silently serializes everything upstream of the first exchange onto
+    one core (measured: minhash_lsh_pairs 2.75 -> 1.02 s at
+    sf0.1/local[32], whose md5-per-shingle signature subtree runs
+    pre-shuffle). On a real bucketed table the scan has enough splits and
+    this exchange is negligible next to the work it parallelizes — the
+    same occupancy rationale as transcripts()' repartition (PLANS.md
+    flagship caveat)."""
+    sc = df.sparkSession.sparkContext
+    return df.repartition(sc.defaultParallelism * 2)
 
 
 @gate("minhash_signatures", oracle=f"""
@@ -1680,19 +1668,6 @@ FROM documents""")
                     F.expr("array_join(transform(features, x -> "
                            "CAST(round(x * 128 + 128) AS INT)), ',')")
                     .alias("feature_sig")))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to defaultParallelism*2 ahead of a Python
-    codec stage. A single-file parquet scan yields ONE split in this
-    sandbox, which silently serializes the whole synth->decode Arrow chain
-    onto one core (measured: media_frames_mjpeg 7-11 s as a single task at
-    sf0.1/local[32] vs ~1 s spread). On a real bucketed table the scan has
-    enough splits and this exchange is negligible next to the codec work
-    it parallelizes — the same occupancy rationale as transcripts()'
-    repartition (PLANS.md flagship caveat)."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism * 2)
 
 
 @gate("media_features_real", oracle="""
@@ -2134,337 +2109,6 @@ def q_media_features_jpeg_prog(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth, schema="media_id long, kind string, payload binary")
     return (extract_media_features(media, mode="real")
             .select("media_id", "kind",
-                    F.expr("array_join(transform(features, x -> "
-                           "CAST(x AS BIGINT)), ',')")
-                    .alias("feature_sig")))
-
-
-def _media_ima_oracle_sql() -> str:
-    """Recursive-CTE replay of the IMA-ADPCM step machine: the synthetic
-    block's nibble stream is md5(text)'s 32 hex digits and the header
-    state comes from md5(text || ':a') bytes, so the decoded samples are
-    closed-form from the same strings. The step/index tables interpolate
-    from operators/mediacodec.IMA_STEPS / IMA_INDEX_ADJ — one source for
-    decoder and oracle, so they cannot drift."""
-    from nlp_lib_spark.operators.mediacodec import IMA_INDEX_ADJ, IMA_STEPS
-    steps = "[" + ", ".join(str(v) for v in IMA_STEPS) + "]"
-    adj = "[" + ", ".join(str(v) for v in IMA_INDEX_ADJ) + "]"
-    hexpos = "strpos('0123456789abcdef', substr({s}, {i}, 1)) - 1"
-    hb = [hexpos.format(s="md5(text || ':a')", i=i + 1) for i in range(6)]
-    return f"""
-WITH RECURSIVE hx AS (
-  SELECT doc_id, md5(text) AS h,
-         ({hb[0]}) * 16 + {hb[1]} AS b0,
-         ({hb[2]}) * 16 + {hb[3]} AS b1,
-         ({hb[4]}) * 16 + {hb[5]} AS b2
-  FROM documents
-), st(doc_id, k, pred, idx) AS (
-  SELECT doc_id, 0, b0 * 256 + b1 - 32768, b2 % 89 FROM hx
-  UNION ALL
-  SELECT doc_id, k + 1,
-         greatest(-32768, least(32767,
-             CASE WHEN (n & 8) = 8 THEN pred - diff ELSE pred + diff END)),
-         greatest(0, least(88, idx + ({adj})[(n & 7) + 1]))
-  FROM (
-    SELECT doc_id, k, pred, idx, n,
-           (stepv >> 3)
-           + CASE WHEN (n & 1) = 1 THEN (stepv >> 2) ELSE 0 END
-           + CASE WHEN (n & 2) = 2 THEN (stepv >> 1) ELSE 0 END
-           + CASE WHEN (n & 4) = 4 THEN stepv ELSE 0 END AS diff
-    FROM (
-      SELECT s.doc_id, s.k, s.pred, s.idx,
-             {hexpos.format(s="hx.h", i="s.k + 1")} AS n,
-             ({steps})[s.idx + 1] AS stepv
-      FROM st s JOIN hx ON hx.doc_id = s.doc_id
-      WHERE s.k < 32
-    )
-  )
-), px AS (
-  SELECT doc_id, list(pred ORDER BY k) AS s FROM st GROUP BY doc_id
-)
-SELECT doc_id AS media_id, 'audio' AS kind, 80 AS n_bytes,
-       array_to_string([8000, 33, list_min(s), list_max(s),
-         list_sum(list_transform(s, x -> abs(x)))] || s[1:16], ',')
-       AS feature_sig
-FROM px
-"""
-
-
-@gate("media_features_ima", oracle=_media_ima_oracle_sql())
-def q_media_features_ima(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-audio decode (VERDICT r4 stretch item 7):
-    documents become genuine IMA-ADPCM WAV files (wFormatTag 0x0011, one
-    block whose nibble stream is md5(text)'s hex digits), and
-    extract_media_features(mode="real") runs the full real path — RIFF
-    chunk walk, ADPCM fmt parse, block header, low-nibble-first unpack,
-    and the reference IMA step machine per nibble
-    (operators/mediacodec.decode_wav_ima). The oracle replays the step
-    machine with a recursive CTE over the same step/index tables, so a
-    hash match proves the 33 decoded samples byte-exactly; the true
-    sample ENCODER (quantizer) is certified by the pytest round-trip
-    tolerance suite."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from nlp_lib_spark.operators.mediacodec import synth_ima_payload
-    from nlp_lib_spark.operators.multimodal import extract_media_features
-    register_views(spark, sf_dir)
-    docs = spark.table("documents").select("doc_id", "text")
-
-    def synth(batches):
-        for pdf in batches:
-            rows = [(int(d), "audio", synth_ima_payload(t))
-                    for d, t in zip(pdf["doc_id"], pdf["text"])]
-            yield pd.DataFrame(rows,
-                               columns=["media_id", "kind", "payload"])
-
-    media = _spread(docs).mapInPandas(
-        synth, schema="media_id long, kind string, payload binary")
-    return (extract_media_features(media, mode="real")
-            .select("media_id", "kind", "n_bytes",
-                    F.expr("array_join(transform(features, x -> "
-                           "CAST(x AS BIGINT)), ',')")
-                    .alias("feature_sig")))
-
-
-def _media_msadpcm_oracle_sql() -> str:
-    """Recursive-CTE replay of the MS-ADPCM two-tap predictor machine:
-    the synthetic block's nibble stream is md5(text)'s 32 hex digits and
-    the header (predictor index, delta, two seed samples) comes from
-    md5(text || ':m') bytes, so the decoded samples are closed-form from
-    the same strings. The coefficient/adaptation tables interpolate from
-    operators/mediacodec.MS_COEF1/MS_COEF2/MS_ADAPT — one source for
-    decoder and oracle. The spec's C signed division truncates toward
-    zero; DuckDB's // does too (verified), so the oracle uses it
-    directly, while the Python decoder spells the truncation out — two
-    different spellings of the same arithmetic agreeing under the hash."""
-    from nlp_lib_spark.operators.mediacodec import (MS_ADAPT, MS_COEF1,
-                                                    MS_COEF2)
-    adapt = "[" + ", ".join(str(v) for v in MS_ADAPT) + "]"
-    c1t = "[" + ", ".join(str(v) for v in MS_COEF1) + "]"
-    c2t = "[" + ", ".join(str(v) for v in MS_COEF2) + "]"
-    hexpos = "strpos('0123456789abcdef', substr({s}, {i}, 1)) - 1"
-    hb = [hexpos.format(s="md5(text || ':m')", i=i + 1) for i in range(14)]
-    byte = ["(" + hb[2 * i] + ") * 16 + " + hb[2 * i + 1]
-            for i in range(7)]
-    return f"""
-WITH RECURSIVE hx AS (
-  SELECT doc_id, md5(text) AS h,
-         ({byte[0]}) AS b0, ({byte[1]}) AS b1, ({byte[2]}) AS b2,
-         ({byte[3]}) AS b3, ({byte[4]}) AS b4, ({byte[5]}) AS b5,
-         ({byte[6]}) AS b6
-  FROM documents
-), hdr AS (
-  SELECT doc_id, h,
-         16 + (b1 * 256 + b2) % 30000 AS delta0,
-         b3 * 256 + b4 - 32768 AS s1_0,
-         b5 * 256 + b6 - 32768 AS s2_0,
-         ({c1t})[b0 % 7 + 1] AS c1,
-         ({c2t})[b0 % 7 + 1] AS c2
-  FROM hx
-), st(doc_id, k, s1, s2, delta) AS (
-  SELECT doc_id, 0, s1_0, s2_0, delta0 FROM hdr
-  UNION ALL
-  SELECT doc_id, k + 1,
-         greatest(-32768, least(32767,
-             (s1 * c1 + s2 * c2) // 256
-             + (CASE WHEN n >= 8 THEN n - 16 ELSE n END) * delta)),
-         s1,
-         greatest(16, (({adapt})[n + 1] * delta) // 256)
-  FROM (
-    SELECT s.doc_id, s.k, s.s1, s.s2, s.delta, hdr.c1, hdr.c2,
-           {hexpos.format(s="hdr.h", i="s.k + 1")} AS n
-    FROM st s JOIN hdr ON hdr.doc_id = s.doc_id
-    WHERE s.k < 32
-  )
-), samples AS (
-  SELECT doc_id, 0 AS j, s2_0 AS v FROM hdr
-  UNION ALL
-  SELECT doc_id, k + 1 AS j, s1 AS v FROM st
-), px AS (
-  SELECT doc_id, list(v ORDER BY j) AS s FROM samples GROUP BY doc_id
-)
-SELECT doc_id AS media_id, 'audio' AS kind, 113 AS n_bytes,
-       array_to_string([8000, 34, list_min(s), list_max(s),
-         list_sum(list_transform(s, x -> abs(x)))] || s[1:16], ',')
-       AS feature_sig
-FROM px
-"""
-
-
-@gate("media_features_msadpcm", oracle=_media_msadpcm_oracle_sql())
-def q_media_features_msadpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MS-ADPCM decode (round 5, completing the classic compressed-
-    WAV family beside IMA and G.711): documents become genuine
-    wFormatTag-0x0002 WAV files (one block whose nibble stream is
-    md5(text)'s hex digits, header state from md5(text || ':m')), and
-    extract_media_features(mode="real") runs the full real path — RIFF
-    chunk walk, MS-ADPCM fmt parse including the 7-pair coefficient
-    table, 7-byte block header, high-nibble-first unpack, and the
-    two-tap predictor + delta-adaptation machine per nibble
-    (operators/mediacodec.decode_wav_msadpcm; decoder certified against
-    an independent spec transliteration by tests/test_mediacodec.py).
-    The oracle replays the machine with a recursive CTE over the same
-    tables, so a hash match proves all 34 decoded samples byte-exactly;
-    the true sample ENCODER (7-predictor scorer + greedy quantizer) is
-    certified by the pytest round-trip suite."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from nlp_lib_spark.operators.mediacodec import synth_msadpcm_payload
-    from nlp_lib_spark.operators.multimodal import extract_media_features
-    register_views(spark, sf_dir)
-    docs = spark.table("documents").select("doc_id", "text")
-
-    def synth(batches):
-        for pdf in batches:
-            rows = [(int(d), "audio", synth_msadpcm_payload(t))
-                    for d, t in zip(pdf["doc_id"], pdf["text"])]
-            yield pd.DataFrame(rows,
-                               columns=["media_id", "kind", "payload"])
-
-    media = _spread(docs).mapInPandas(
-        synth, schema="media_id long, kind string, payload binary")
-    return (extract_media_features(media, mode="real")
-            .select("media_id", "kind", "n_bytes",
-                    F.expr("array_join(transform(features, x -> "
-                           "CAST(x AS BIGINT)), ',')")
-                    .alias("feature_sig")))
-
-
-_G711_ORACLE = """
-WITH hx AS (
-  SELECT doc_id, md5(text) || md5(text || ':1') AS h FROM documents
-), b AS (
-  SELECT doc_id, g.k AS k,
-         (strpos('0123456789abcdef', substr(h, 2*g.k + 1, 1)) - 1) * 16
-         + strpos('0123456789abcdef', substr(h, 2*g.k + 2, 1)) - 1 AS v
-  FROM hx, generate_series(0, 31) AS g(k)
-), dec AS (
-  SELECT doc_id, k,
-         CASE WHEN doc_id % 2 = 0 THEN
-           CASE WHEN (255 - v) >= 128
-                THEN 132 - ((((255 - v) % 16) * 8 + 132)
-                            * (1 << (((255 - v) // 16) % 8)))
-                ELSE ((((255 - v) % 16) * 8 + 132)
-                      * (1 << (((255 - v) // 16) % 8))) - 132
-           END
-         ELSE
-           (CASE WHEN xor(v, 85) >= 128 THEN 1 ELSE -1 END) *
-           (CASE WHEN ((xor(v, 85) // 16) % 8) = 0
-                 THEN (xor(v, 85) % 16) * 16 + 8
-                 WHEN ((xor(v, 85) // 16) % 8) = 1
-                 THEN (xor(v, 85) % 16) * 16 + 264
-                 ELSE ((xor(v, 85) % 16) * 16 + 264)
-                      * (1 << (((xor(v, 85) // 16) % 8) - 1))
-            END)
-         END AS s
-  FROM b
-), px AS (
-  SELECT doc_id, list(s ORDER BY k) AS s FROM dec GROUP BY doc_id
-)
-SELECT doc_id AS media_id, 'audio' AS kind, 90 AS n_bytes,
-       array_to_string([8000, 32, list_min(s), list_max(s),
-         list_sum(list_transform(s, x -> abs(x)))] || s[1:16], ',')
-       AS feature_sig
-FROM px
-"""
-
-
-_FLAC_ORACLE = """
-WITH hx AS (
-  SELECT doc_id, md5(text) || md5(text || ':1') AS h FROM documents
-), b AS (
-  SELECT doc_id, g.k AS k,
-         (strpos('0123456789abcdef', substr(h, 2*g.k + 1, 1)) - 1) * 16
-         + strpos('0123456789abcdef', substr(h, 2*g.k + 2, 1)) - 1 AS v
-  FROM hx, generate_series(0, 31) AS g(k)
-), px AS (
-  SELECT doc_id, list(v ORDER BY k) AS p FROM b GROUP BY doc_id
-), sm AS (
-  SELECT doc_id, list_transform(generate_series(0, 15), t ->
-           p[2*t + 1] * 256 + p[2*t + 2] - 32768) AS s
-  FROM px
-)
-SELECT doc_id AS media_id, 'audio' AS kind,
-       array_to_string([8000, 16, list_min(s), list_max(s),
-         list_sum(list_transform(s, x -> abs(x)))] || s, ',') AS feature_sig
-FROM sm
-"""
-
-
-@gate("media_features_flac", oracle=_FLAC_ORACLE)
-def q_media_features_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL FLAC decode (operators/flac — the free-lossless bitstream
-    from the public spec, pure stdlib): every document becomes a genuine
-    FLAC file over the md5-derived 16-sample PCM16 stream, with the
-    residue class steering encoder features — multi-frame streams with
-    UTF-8-coded frame numbers (doc_id%5=1), partitioned Rice residuals
-    (=2), forced LPC subframes (=3), escape partitions (=4), automatic
-    constant/fixed selection otherwise.  The decoder walks STREAMINFO,
-    frame sync, CRC-8 + CRC-16, subframe types, Rice/escape residuals
-    and verifies the STREAMINFO MD5 of the reconstructed samples.  FLAC
-    is lossless, so the oracle recomputes the sample statistics
-    closed-form from the md5 expansion — a hash match proves the full
-    decode chain inverts the encoder bit-exactly.  n_bytes is excluded
-    like the PNG/JPEG gates: compressed size is an encoder knob, not a
-    data contract."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from nlp_lib_spark.operators.mediacodec import synth_flac_payload
-    from nlp_lib_spark.operators.multimodal import extract_media_features
-    register_views(spark, sf_dir)
-    docs = spark.table("documents").select("doc_id", "text")
-
-    def synth(batches):
-        for pdf in batches:
-            rows = [(int(d), "audio", synth_flac_payload(int(d), t))
-                    for d, t in zip(pdf["doc_id"], pdf["text"])]
-            yield pd.DataFrame(rows,
-                               columns=["media_id", "kind", "payload"])
-
-    media = _spread(docs).mapInPandas(
-        synth, schema="media_id long, kind string, payload binary")
-    return (extract_media_features(media, mode="real")
-            .select("media_id", "kind",
-                    F.expr("array_join(transform(features, x -> "
-                           "CAST(x AS BIGINT)), ',')")
-                    .alias("feature_sig")))
-
-
-@gate("media_features_g711", oracle=_G711_ORACLE)
-def q_media_features_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL companded-telephony-audio decode: documents become genuine
-    G.711 WAV files (wFormatTag 0x0007 µ-law for even doc_id, 0x0006
-    A-law for odd; the 8-bit code stream is md5_expand(text, 32)), and
-    extract_media_features(mode="real") runs the full real path — RIFF
-    chunk walk, fmt 6/7 parse, and the canonical CCITT segment/mantissa
-    expansion per code (operators/mediacodec.decode_wav_g711). The
-    oracle recomputes the expansion closed-form in integer SQL from the
-    same md5 bytes (bias-0x84 µ-law / 0x55-toggle A-law formulas), so a
-    hash match proves the decoder expands every code byte-exactly; the
-    nearest-codeword ENCODER is certified by the pytest idempotence +
-    round-trip suite."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from nlp_lib_spark.operators.mediacodec import synth_g711_payload
-    from nlp_lib_spark.operators.multimodal import extract_media_features
-    register_views(spark, sf_dir)
-    docs = spark.table("documents").select("doc_id", "text")
-
-    def synth(batches):
-        for pdf in batches:
-            rows = [(int(d), "audio", synth_g711_payload(int(d), t))
-                    for d, t in zip(pdf["doc_id"], pdf["text"])]
-            yield pd.DataFrame(rows,
-                               columns=["media_id", "kind", "payload"])
-
-    media = _spread(docs).mapInPandas(
-        synth, schema="media_id long, kind string, payload binary")
-    return (extract_media_features(media, mode="real")
-            .select("media_id", "kind", "n_bytes",
                     F.expr("array_join(transform(features, x -> "
                            "CAST(x AS BIGINT)), ',')")
                     .alias("feature_sig")))
@@ -5470,17 +5114,15 @@ _kg_base_composite()
 def _media_suite_composite() -> None:
     """Multimodal decode family under one driver gate: the deterministic
     fake-decode path (schema/partitioning plumbing), the real BMP/WAV
-    stdlib decoders, the real IMA-ADPCM compressed-audio decoder (RIFF
-    walk + 4-bit step machine, round 5), the real G.711 µ-law/A-law
-    companded-audio decoder (round 5), the real MS-ADPCM two-tap
-    predictor decoder (fmt 0x0002, round 5), the real PNG decoder (zlib
-    inflate + scanline defilter), the real GIF87a/89a LZW decoder
-    (giflib-conformant variable-width codes, interlace, deferred
-    clears, round 5), and the real baseline + progressive JPEG decoders
-    (Huffman + dequant + IDCT; multi-scan successive approximation),
-    tagged by codec. media_features_png / media_features_gif /
-    media_features_jpeg(_prog) have no n_bytes column (compressed size
-    is build-/data-dependent); they pad a constant -1 on BOTH sides."""
+    stdlib decoders, the real PNG decoder (zlib inflate + scanline
+    defilter), the real GIF87a/89a LZW decoder (giflib-conformant
+    variable-width codes, interlace, deferred clears, round 5), the real
+    BI_RLE8 BMP decoder, and the real baseline + progressive JPEG
+    decoders (Huffman + dequant + IDCT; multi-scan successive
+    approximation), tagged by codec. media_features_png /
+    media_features_gif / media_features_rle8 / media_features_jpeg(_prog)
+    have no n_bytes column (compressed size is build-/data-dependent);
+    they pad a constant -1 on BOTH sides."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         from pyspark.sql import functions as F
@@ -5488,20 +5130,12 @@ def _media_suite_composite() -> None:
             .select(F.lit("fake").alias("codec"), "*")
         real = QUERIES["media_features_real"](spark, sf_dir) \
             .select(F.lit("real").alias("codec"), "*")
-        ima = QUERIES["media_features_ima"](spark, sf_dir) \
-            .select(F.lit("ima").alias("codec"), "*")
-        g711 = QUERIES["media_features_g711"](spark, sf_dir) \
-            .select(F.lit("g711").alias("codec"), "*")
-        msa = QUERIES["media_features_msadpcm"](spark, sf_dir) \
-            .select(F.lit("msadpcm").alias("codec"), "*")
-        out = (fake.unionByName(real).unionByName(ima)
-               .unionByName(g711).unionByName(msa))
+        out = fake.unionByName(real)
         for codec, member in (("png", "media_features_png"),
                               ("gif", "media_features_gif"),
                               ("rle8", "media_features_rle8"),
                               ("jpeg", "media_features_jpeg"),
-                              ("jpegp", "media_features_jpeg_prog"),
-                              ("flac", "media_features_flac")):
+                              ("jpegp", "media_features_jpeg_prog")):
             out = out.unionByName(
                 QUERIES[member](spark, sf_dir)
                 .select(F.lit(codec).alias("codec"), "media_id", "kind",
@@ -5511,25 +5145,14 @@ def _media_suite_composite() -> None:
 
     QUERIES["media_suite"] = fn
     COMPOSITE_MEMBERS["media_suite"] = (
-        "media_features", "media_features_real", "media_features_ima",
-        "media_features_g711", "media_features_msadpcm",
+        "media_features", "media_features_real",
         "media_features_png", "media_features_gif", "media_features_rle8",
-        "media_features_jpeg", "media_features_jpeg_prog",
-        "media_features_flac")
+        "media_features_jpeg", "media_features_jpeg_prog")
     ORACLES["media_suite"] = f"""
 SELECT 'fake' AS codec, m.* FROM ({ORACLES["media_features"]}
 ) m
 UNION ALL
 SELECT 'real' AS codec, m.* FROM ({ORACLES["media_features_real"]}
-) m
-UNION ALL
-SELECT 'ima' AS codec, m.* FROM ({ORACLES["media_features_ima"]}
-) m
-UNION ALL
-SELECT 'g711' AS codec, m.* FROM ({ORACLES["media_features_g711"]}
-) m
-UNION ALL
-SELECT 'msadpcm' AS codec, m.* FROM ({ORACLES["media_features_msadpcm"]}
 ) m
 UNION ALL
 SELECT 'png' AS codec, media_id, kind, CAST(-1 AS INTEGER) AS n_bytes,
@@ -5551,10 +5174,6 @@ UNION ALL
 SELECT 'jpegp' AS codec, media_id, kind, CAST(-1 AS INTEGER) AS n_bytes,
        feature_sig FROM ({ORACLES["media_features_jpeg_prog"]}
 ) m
-UNION ALL
-SELECT 'flac' AS codec, media_id, kind, CAST(-1 AS INTEGER) AS n_bytes,
-       feature_sig FROM ({ORACLES["media_features_flac"]}
-) m
 """
 
 
@@ -5575,8 +5194,6 @@ union_composite("media_frames", "codec", {
     "mjpeg": "media_frames_mjpeg",
     "gif": "media_frames_gif",
 })
-
-
 
 
 # --------------------------------------------------------------------------
@@ -5604,7 +5221,7 @@ _GATE_ORDER = [
     "doc_stats",          # quality + lang-ID + token counts + fingerprint
                           # + MinHash signatures + SimHash (join on doc_id)
     "kg_base",            # transcripts derivation + sentence splitter
-    "media_suite",        # fake + real BMP/WAV/ADPCM/G.711/PNG/GIF/JPEG
+    "media_suite",        # fake + real BMP/WAV/PNG/GIF/RLE8/JPEG
     "media_frames",       # DIB-AVI + Motion-JPEG + animated-GIF demux
     "kg_link_tfidf_all",  # broadcast + distributed TF-IDF linking tiers
     "kg_triples_all",     # flagship batch plan + streaming drain
@@ -5636,10 +5253,8 @@ _GATE_ORDER = [
     "kg_conversations", "kg_boilerplate",
     "dedup_exact", "kg_stream_dedup", "kg_stream_dedup_wm",
     "kg_link_tfidf", "kg_link_tfidf_dist",
-    "media_features_real", "media_features_ima", "media_features_g711",
-    "media_features_msadpcm", "media_features_png", "media_features_gif",
+    "media_features_real", "media_features_png", "media_features_gif",
     "media_features_rle8", "media_features_jpeg", "media_features_jpeg_prog",
-    "media_features_flac",
     "media_features", "media_frames_avi", "media_frames_mjpeg",
     "media_frames_gif",
     "ann_topk", "ann_topk_ivf_kmeans", "ann_topk_lsh", "ann_topk_ivf",
@@ -5681,8 +5296,20 @@ def check_cap_coverage(order: list[str],
             f"coverage: {uncovered} — add them to a composite or to the cap")
 
 
+def check_gate_order(order: list[str], registered) -> None:
+    """Every ``_GATE_ORDER`` name must be a registered gate: a name left
+    behind when its gate is deleted would otherwise drop out of the
+    order silently. Pure for the same reason as check_cap_coverage."""
+    stale = [n for n in order if n not in registered]
+    if stale:
+        raise ValueError(
+            f"_GATE_ORDER names unregistered gates: {stale} — remove them "
+            f"together with their gates")
+
+
 def _apply_gate_order() -> list[str]:
-    ordered = [n for n in _GATE_ORDER if n in QUERIES]
+    check_gate_order(_GATE_ORDER, QUERIES)
+    ordered = list(_GATE_ORDER)
     # Any gate registered but absent from the list slots in right after the
     # composite head so a forgotten entry is certified, not silently
     # demoted (the membership assertion below then flags whichever in-cap

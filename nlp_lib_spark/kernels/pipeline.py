@@ -152,8 +152,9 @@ def fused_subj_obj(mapping: dict[str, str],
                    token: str) -> tuple[str, str] | None:
     """Subj/obj resolution for a fused same-token pair (i == j): the two
     ``/``-joined placeholder parts resolve independently. None when the
-    token is not actually fused — the shared emit rule of the rule / ML
-    extraction paths (keep in ONE place; it diverged silently once)."""
+    token is not actually fused — the shared emit rule of the rule / ML /
+    kernel extraction paths (keep in ONE place; it diverged silently
+    once)."""
     parts = token.split("/")
     if len(parts) < 2:
         return None

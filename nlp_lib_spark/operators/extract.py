@@ -135,7 +135,8 @@ def triples_from_annotations(ann: DataFrame) -> DataFrame:
     feed mentions, triples, clauses, and linking — the Spark analogue of
     the reference's four aligned per-doc files being read once
     (ppi/MLExtractor.java:61-69)."""
-    from nlp_lib_spark.kernels.pipeline import _pred_term, resolve_surface
+    from nlp_lib_spark.kernels.pipeline import (_pred_term, fused_subj_obj,
+                                                resolve_surface)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = ["conv_id", "turn_idx", "sent_id", "e1", "e2",
@@ -152,11 +153,10 @@ def triples_from_annotations(ann: DataFrame) -> DataFrame:
                     i, j = int(p["e1"]), int(p["e2"])
                     pred = _pred_term(domain, i, j)
                     if i == j:
-                        parts = blinded[i].split("/")
-                        if len(parts) < 2:
+                        so = fused_subj_obj(mapping, blinded[i])
+                        if so is None:
                             continue
-                        subj = mapping.get(parts[0], parts[0])
-                        obj = mapping.get(parts[1], parts[1])
+                        subj, obj = so
                     else:
                         subj = resolve_surface(mapping, blinded[i])
                         obj = resolve_surface(mapping, blinded[j])

@@ -24,7 +24,7 @@ from nlp_lib_spark.kernels.kernelscore import (prototype_score,
                                                relation_instance)
 from nlp_lib_spark.kernels.pipeline import (KGConfig, KGRuntime,
                                             annotate_sentence,
-                                            resolve_surface)
+                                            fused_subj_obj, resolve_surface)
 from nlp_lib_spark.kernels.text import split_sentences, strip_citations
 
 KERNEL_TRIPLES_SCHEMA = ("conv_id string, turn_idx int, sent_id int, "
@@ -117,11 +117,10 @@ def extract_triples_kernel(df: DataFrame, config: KGConfig,
                         m = ann["mapping"]
                         i, j = inst["e1"], inst["e2"]
                         if i == j:  # fused self-pair: parts are subj/obj
-                            parts = ann["blinded"][i].split("/")
-                            if len(parts) < 2:
+                            so = fused_subj_obj(m, ann["blinded"][i])
+                            if so is None:
                                 continue
-                            subj = m.get(parts[0], parts[0])
-                            obj = m.get(parts[1], parts[1])
+                            subj, obj = so
                         else:
                             subj = resolve_surface(m, ann["blinded"][i])
                             obj = resolve_surface(m, ann["blinded"][j])

@@ -79,14 +79,16 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
 
 def compare_query(spark, sf_dir: str, name: str) -> dict:
     sdf = QUERIES[name](spark, sf_dir).toPandas()
-    out = {"name": name, "spark_rows": len(sdf)}
+    n_s, h_s = frame_hash(sdf)
+    # spark_hash makes sweeps diffable across commits: a refactor that
+    # keeps every gate's value must keep every spark_hash
+    out = {"name": name, "spark_rows": n_s, "spark_hash": h_s}
     if name not in ORACLES:
         out["status"] = "rows_only"
         return out
     con = duck_connection(sf_dir)
     ddf = con.sql(ORACLES[name]).df()
     con.close()
-    n_s, h_s = frame_hash(sdf)
     n_d, h_d = frame_hash(ddf)
     k_s, k_d = dtype_kinds(sdf), dtype_kinds(ddf)
     # int-vs-float kind drift per shared column: the exact divergence class

@@ -183,9 +183,58 @@ def stream_sessions(spark: SparkSession, input_dir: str,
             .agg(F.count(F.lit(1)).alias("n_turns")))
 
 
+def write_session_flush(spark: SparkSession, input_dir: str,
+                        gap_seconds: int = 1800) -> str:
+    """The availableNow flush policy for :func:`run_stream_sessions_once`,
+    derived from the event times already in ``input_dir``: appends two
+    flush-sentinel files there and returns the watermark delay to drain
+    with.
+
+    * delay = corpus span + 1 s.  The drain's file order is NOT event-time
+      order (each parquet part spans the whole range), so the watermark
+      (max ts seen - delay) must stay below the earliest event until every
+      data file is read; a smaller delay silently DROPS rows arriving in a
+      later file (observed: 185/234 sessions at 10 s).
+    * Sentinel 1 at max_ts + delay + gap + 1 s pushes the watermark past
+      every real session end (last ts + gap).  Sentinel 2, 2 * gap later,
+      runs a batch UNDER that watermark and so flushes them: append-mode
+      emission lags the watermark by one batch, and the trailing no-data
+      batch that would otherwise flush is not guaranteed under
+      availableNow (observed: 187/234 sessions with a single sentinel).
+    * FileStreamSource orders files by mtime, so each sentinel file's
+      mtime is stamped 2 s past the previous file instead of sleeping
+      between writes.
+
+    Nothing is a fixed date, so no corpus can outgrow the policy."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+    lo, hi = (spark.read.schema(CONV_TS_SCHEMA).parquet(input_dir)
+              .agg(F.expr("min(unix_micros(ts))"),
+                   F.expr("max(unix_micros(ts))"))
+              .first())
+    if hi is None:  # no events, nothing to flush
+        return "1 second"
+    delay_s = (hi - lo) // 1_000_000 + 1
+    first_us = hi + (delay_s + gap_seconds + 1) * 1_000_000
+    seen = set(glob.glob(os.path.join(input_dir, "*.parquet")))
+    mtime = max(os.path.getmtime(f) for f in seen)
+    for ts_us in (first_us, first_us + 2 * gap_seconds * 1_000_000):
+        (spark.range(1)
+         .select(F.lit(SESSION_FLUSH_CONV).alias("conv_id"),
+                 F.expr(f"timestamp_micros({ts_us})").alias("ts"))
+         .coalesce(1).write.mode("append").parquet(input_dir))
+        mtime += 2
+        now = set(glob.glob(os.path.join(input_dir, "*.parquet")))
+        for f in now - seen:
+            os.utime(f, (mtime, mtime))
+        seen = now
+    return f"{delay_s} seconds"
+
+
 def run_stream_sessions_once(spark: SparkSession, input_dir: str,
                              gap_seconds: int = 1800,
-                             delay: str = "3650 days",
                              query_name: str = "sessions_stream",
                              max_files_per_trigger: int | None = 1
                              ) -> DataFrame:
@@ -195,15 +244,13 @@ def run_stream_sessions_once(spark: SparkSession, input_dir: str,
     ``end`` is ``max_ts + gap`` by definition, so the gap is subtracted
     back) and the flush sentinel removed.
 
-    The default ``delay`` is deliberately enormous: the drain's file
-    order is NOT event-time order (each parquet part spans the whole
-    range), so a small watermark delay silently DROPS rows that arrive
-    in a later file than the watermark-advancing maximum (observed:
-    185/234 sessions at 10 s).  A delay wider than the corpus span
-    models "unordered replay"; the flush sentinel's far-future event
-    time still lands beyond delay + every session end, so finalization
-    is unaffected.  A live deployment with roughly-ordered arrival uses
-    a delay matched to its real disorder instead."""
+    Appends the flush sentinels to ``input_dir`` and takes the watermark
+    delay from :func:`write_session_flush`: a delay wider than the corpus
+    span models "unordered replay", so the drain equals the batch
+    sessionization of the same files.  A live deployment with
+    roughly-ordered arrival uses :func:`stream_sessions` with a delay
+    matched to its real disorder instead."""
+    delay = write_session_flush(spark, input_dir, gap_seconds)
     q = (stream_sessions(spark, input_dir, gap_seconds, delay=delay,
                          max_files_per_trigger=max_files_per_trigger)
          .writeStream.outputMode("append")

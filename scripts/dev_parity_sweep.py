@@ -6,6 +6,11 @@ gate whose status is not ``ok``, including the per-column int-vs-float
 ``dtype_drift`` audit added in round 4 (VERDICT r3 items 2-3). Exit code 1
 on any failure so this can gate commits.
 
+It also prints one ``HASH <gate> <status> <rows> <spark_hash>`` line per
+gate: diff the sorted HASH lines of two checkouts to prove a refactor kept
+every gate's value. The session takes its core count from
+SPARK_GRAFT_CPUS (session.get_spark).
+
 Usage: python3 scripts/dev_parity_sweep.py [sf_dir] [gate ...]
 """
 from __future__ import annotations
@@ -24,11 +29,14 @@ def main() -> int:
     names = sys.argv[2:] or None
     from nlp_lib_spark.paritycheck import run_all
     from nlp_lib_spark.session import get_spark
-    spark = get_spark(cpus=16)
+    spark = get_spark()
     try:
         t0 = time.time()
         results = run_all(spark, sf_dir, names=names)
         bad = [r for r in results if r.get("status") != "ok"]
+        for r in results:
+            print("HASH", r["name"], r["status"], r.get("spark_rows"),
+                  r.get("spark_hash"))
         for r in results:
             if r.get("dtype_drift"):
                 print("DRIFT:", r["name"], r["dtype_drift"])

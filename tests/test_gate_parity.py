@@ -131,8 +131,9 @@ def test_cap_coverage_check_fires_on_uncovered_gate():
     coverage and pass once a composite covers it."""
     import pytest
 
-    from nlp_lib_spark.gate import (COMPOSITE_MEMBERS, DRIVER_CERTIFIED,
-                                    QUERIES, check_cap_coverage)
+    from nlp_lib_spark.gate import (_GATE_ORDER, COMPOSITE_MEMBERS,
+                                    DRIVER_CERTIFIED, QUERIES,
+                                    check_cap_coverage, check_gate_order)
     order = [f"g{i}" for i in range(6)]
     members = {"g0": ("g3", "g4")}
     # ValueError, not AssertionError: the check must survive python -O
@@ -145,6 +146,10 @@ def test_cap_coverage_check_fires_on_uncovered_gate():
     # cap must not count
     with pytest.raises(ValueError, match="g5"):
         check_cap_coverage(order, {"g4": ("g5",)}, cap=3)
+    # an order entry whose gate was deleted must fail, not drop out
+    with pytest.raises(ValueError, match="gone_gate"):
+        check_gate_order(["g0", "gone_gate", "g1"], set(order))
     # and the real registry passes at the real cap, with the real members
     check_cap_coverage(list(QUERIES), COMPOSITE_MEMBERS)
+    check_gate_order(_GATE_ORDER, QUERIES)
     assert len(DRIVER_CERTIFIED) == 50

@@ -316,89 +316,6 @@ def test_synth_jpeg_matches_oracle_model():
         assert f == _flat_raster(list(md5_expand(f"{text}#j{k}", 4)))
 
 
-# ------------------------------------------------- IMA ADPCM WAV (round 5)
-
-@settings(max_examples=40, deadline=None)
-@given(st.lists(st.integers(-32768, 32767), min_size=1, max_size=64),
-       st.sampled_from([8000, 16000]))
-def test_ima_decode_inverts_nibble_stream(samples, rate):
-    """decode(encode) replays the encoder's own predictor track exactly:
-    the encoder commits to the decoded value after each nibble, so the
-    decoder must reproduce that track bit-for-bit (the lossy step is the
-    quantizer, never the reconstruction)."""
-    from nlp_lib_spark.operators.mediacodec import (_ima_decode_nibble,
-                                                    _ima_encode_sample,
-                                                    decode_wav_ima,
-                                                    encode_wav_ima)
-    blob = encode_wav_ima(samples, rate)
-    assert blob[:4] == b"RIFF" and blob[8:12] == b"WAVE"
-    rate2, dec = decode_wav_ima(blob)
-    assert rate2 == rate
-    # replay the encoder's committed predictor values
-    pred, idx = samples[0], 0
-    exp = [pred]
-    for s in samples[1:]:
-        n = _ima_encode_sample(s, pred, idx)
-        pred, idx = _ima_decode_nibble(n, pred, idx)
-        exp.append(pred)
-    # nibble padding to an even byte may append one extra decoded sample
-    assert dec[:len(exp)] == exp and len(dec) - len(exp) <= 1
-
-
-def test_ima_roundtrip_tracks_after_attack():
-    """Quantizer quality: after the step-size attack transient, a +/-12k
-    sine tracks within a small fraction of full scale (the IMA design
-    point); the transient itself may lag (step starts at 7)."""
-    import math
-
-    from nlp_lib_spark.operators.mediacodec import (decode_wav_ima,
-                                                    encode_wav_ima)
-    samples = [int(12000 * math.sin(i / 5)) for i in range(200)]
-    _, dec = decode_wav_ima(encode_wav_ima(samples, 8000))
-    err = [abs(a - b) for a, b in zip(samples, dec)]
-    assert max(err[50:]) < 1500 and sum(err[50:]) / 150 < 400
-
-
-def test_ima_rejects_garbage_and_corrupt_header():
-    from nlp_lib_spark.operators.mediacodec import (build_wav_ima_block,
-                                                    decode_wav_ima)
-    with pytest.raises(ValueError):
-        decode_wav_ima(b"RIFFxxxxAVI LIST")
-    blob = bytearray(build_wav_ima_block(0, 0, [0, 0]))
-    blob[blob.index(b"data") + 8 + 2] = 89  # step index out of range
-    with pytest.raises(ValueError):
-        decode_wav_ima(bytes(blob))
-    with pytest.raises(ValueError):
-        build_wav_ima_block(0, 0, [1, 2, 3])  # odd nibble count
-
-
-def test_ima_synth_matches_oracle_model_and_dispatch():
-    """synth_ima_payload decodes to exactly the md5-driven state-machine
-    model the DuckDB oracle replays, and real_features dispatches the
-    0x0011 fmt tag to the ADPCM path (not the stdlib wave module)."""
-    import hashlib
-
-    from nlp_lib_spark.operators.mediacodec import (_ima_decode_nibble,
-                                                    decode_audio,
-                                                    real_features,
-                                                    synth_ima_payload)
-    text = "the cat sat on the mat"
-    payload = synth_ima_payload(text)
-    assert len(payload) == 80  # the gate oracle's n_bytes constant
-    rate, dec = decode_audio(payload)
-    b = hashlib.md5((text + ":a").encode()).digest()
-    pred, idx = b[0] * 256 + b[1] - 32768, b[2] % 89
-    exp = [pred]
-    for c in hashlib.md5(text.encode()).hexdigest():
-        pred, idx = _ima_decode_nibble(int(c, 16), pred, idx)
-        exp.append(pred)
-    assert (rate, dec) == (8000, exp)
-    feats = real_features(payload)
-    assert feats[:5] == [8000.0, 33.0, float(min(exp)), float(max(exp)),
-                         float(sum(abs(v) for v in exp))]
-    assert feats[5:] == [float(v) for v in exp[:16]]
-
-
 # ------------------------------------------------ progressive JPEG (SOF2)
 
 def test_jpeg_progressive_flat_block_exact_and_dispatch():
@@ -478,91 +395,6 @@ def test_jpeg_progressive_real_features_seam():
     text = "seam check"
     assert (real_features(synth_jpeg_prog_payload(text))
             == real_features(synth_jpeg_payload(text)))
-
-
-# ------------------------------------------------ G.711 µ-law / A-law WAV
-
-def test_g711_canonical_expansion_points():
-    """Pin the CCITT reference expansions: segment extremes, zero codes,
-    and the sign convention for both laws."""
-    from nlp_lib_spark.operators.mediacodec import (g711_alaw_to_linear,
-                                                    g711_ulaw_to_linear)
-    assert g711_ulaw_to_linear(0x00) == -32124
-    assert g711_ulaw_to_linear(0x80) == 32124
-    assert g711_ulaw_to_linear(0xFF) == 0 == g711_ulaw_to_linear(0x7F)
-    assert g711_alaw_to_linear(0x55) == -8
-    assert g711_alaw_to_linear(0xD5) == 8
-    assert g711_alaw_to_linear(0x2A) == -32256
-    assert g711_alaw_to_linear(0xAA) == 32256
-
-
-def test_g711_code_idempotence_and_full_table_roundtrip():
-    """encode(decode(code)) == code for every one of the 256 codes of
-    both laws (expansions are unique per law except the µ-law ±0 pair,
-    where the tie rule picks the smaller code deterministically)."""
-    from nlp_lib_spark.operators.mediacodec import (_g711_table,
-                                                    decode_wav_g711,
-                                                    encode_wav_g711)
-    for law in ("ulaw", "alaw"):
-        tab = _g711_table(law)
-        wav = encode_wav_g711(tab, law)
-        rate, dec = decode_wav_g711(wav)
-        assert (rate, dec) == (8000, tab)
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.lists(st.integers(-32768, 32767), min_size=1, max_size=64),
-       st.sampled_from(["ulaw", "alaw"]))
-def test_g711_roundtrip_quantization_bound(samples, law):
-    """Companding error is bounded by half the top segment's step (the
-    optimal quantizer picks the nearest codeword)."""
-    from nlp_lib_spark.operators.mediacodec import (decode_audio,
-                                                    encode_wav_g711)
-    rate, dec = decode_audio(encode_wav_g711(samples, law))
-    assert rate == 8000 and len(dec) == len(samples)
-    bound = 512 if law == "alaw" else 1024  # half of the top-segment step
-    for s, d in zip(samples, dec):
-        # clipping at the code range extremes dominates near ±32767
-        lim = 32256 if law == "alaw" else 32124
-        if abs(s) > lim:
-            assert abs(d) == lim and (s >= 0) == (d >= 0)
-        else:
-            assert abs(s - d) <= bound, (s, d)
-
-
-def test_g711_rejects_garbage_and_wrong_layout():
-    from nlp_lib_spark.operators.mediacodec import (build_wav_g711,
-                                                    decode_wav_g711,
-                                                    encode_wav)
-    with pytest.raises(ValueError):
-        decode_wav_g711(b"not a wav")
-    with pytest.raises(ValueError):
-        decode_wav_g711(encode_wav([0, 1, 2]))  # PCM16 fmt tag
-    good = build_wav_g711(bytes(range(32)), "ulaw")
-    bad = good.replace(b"data", b"datx")
-    with pytest.raises(ValueError):
-        decode_wav_g711(bad)
-
-
-def test_g711_synth_matches_oracle_model_and_dispatch():
-    """synth_g711_payload decodes to the closed-form table lookups over
-    md5_expand bytes — the property the gate oracle recomputes in SQL —
-    and real_features dispatches it through the audio path."""
-    from nlp_lib_spark.operators.mediacodec import (_g711_table,
-                                                    decode_audio,
-                                                    real_features,
-                                                    synth_g711_payload)
-    text = "the quick brown fox"
-    for did, law in ((0, "ulaw"), (1, "alaw")):
-        payload = synth_g711_payload(did, text)
-        assert len(payload) == 90  # the gate oracle's n_bytes constant
-        rate, dec = decode_audio(payload)
-        exp = [_g711_table(law)[b] for b in md5_expand(text, 32)]
-        assert (rate, dec) == (8000, exp)
-        feats = real_features(payload)
-        assert feats[:5] == [8000.0, 32.0, float(min(exp)), float(max(exp)),
-                             float(sum(abs(v) for v in exp))]
-        assert feats[5:] == [float(v) for v in exp[:16]]
 
 
 # --------------------------------------------------------------- GIF (LZW)
@@ -665,134 +497,6 @@ def test_gif_conformance_against_system_giflib():
     giflib_encode_gray(foreign, big, 150, 200)
     with open(foreign, "rb") as f:
         assert decode_gif(f.read()) == (150, 200, big)
-
-
-# ------------------------------------------------------------- MS ADPCM
-
-def _ms_spec_decode_block(pred_idx, delta, s1, s2, nibbles):
-    """Independent literal transliteration of the MS 'Multimedia Data
-    Standards Update' ADPCM decode pseudocode (float division + trunc =
-    the C signed-division semantics), kept deliberately different in
-    shape from mediacodec's integer form."""
-    import math
-
-    from nlp_lib_spark.operators.mediacodec import (MS_ADAPT, MS_COEF1,
-                                                    MS_COEF2)
-    c1, c2 = MS_COEF1[pred_idx], MS_COEF2[pred_idx]
-    out = [s2, s1]
-    for n in nibbles:
-        lPredSample = int(math.trunc((s1 * c1 + s2 * c2) / 256))
-        iErrorDelta = n - 16 if n & 8 else n
-        lNewSample = lPredSample + delta * iErrorDelta
-        lNewSample = max(-32768, min(32767, lNewSample))
-        delta = int(math.trunc(delta * MS_ADAPT[n] / 256))
-        if delta < 16:
-            delta = 16
-        s2, s1 = s1, lNewSample
-        out.append(lNewSample)
-    return out
-
-
-@settings(max_examples=120, deadline=None)
-@given(st.integers(0, 6), st.integers(16, 16000),
-       st.integers(-32768, 32767), st.integers(-32768, 32767), st.data())
-def test_msadpcm_decoder_matches_spec_transliteration(pred_idx, delta,
-                                                      s1, s2, data):
-    from nlp_lib_spark.operators.mediacodec import (
-        build_wav_msadpcm_block, decode_wav_msadpcm)
-    nibbles = data.draw(st.lists(st.integers(0, 15), min_size=2,
-                                 max_size=60).filter(
-                                     lambda v: len(v) % 2 == 0))
-    blob = build_wav_msadpcm_block(pred_idx, delta, s1, s2, nibbles)
-    assert decode_wav_msadpcm(blob) == (
-        8000, _ms_spec_decode_block(pred_idx, delta, s1, s2, nibbles))
-
-
-def test_msadpcm_roundtrip_tracks_smooth_signal():
-    """Encoder fidelity: decode(encode(x)) tracks a +/-15k two-tone sine
-    within a small fraction of peak (the two-tap predictor's design
-    point), and the blob is a well-formed single-block WAV."""
-    import math
-
-    from nlp_lib_spark.operators.mediacodec import (decode_wav_msadpcm,
-                                                    encode_wav_msadpcm)
-    sig = [int(12000 * math.sin(i / 9) + 3000 * math.sin(i / 3))
-           for i in range(400)]
-    blob = encode_wav_msadpcm(sig)
-    assert blob[:4] == b"RIFF" and blob[8:12] == b"WAVE"
-    rate, dec = decode_wav_msadpcm(blob)
-    assert rate == 8000 and dec[:2] == sig[:2]
-    err = sum(abs(a - b) for a, b in zip(sig, dec)) / len(sig)
-    assert err / max(abs(v) for v in sig) < 0.05
-
-
-def test_msadpcm_multi_block_state_resets():
-    """Two concatenated blocks decode independently: block 2's samples
-    equal a fresh single-block decode of the same header+nibbles."""
-    import struct
-
-    from nlp_lib_spark.operators.mediacodec import (
-        build_wav_msadpcm_block, decode_wav_msadpcm)
-    b1 = build_wav_msadpcm_block(1, 500, 1000, -1000, [7, 8, 15, 0])
-    b2 = build_wav_msadpcm_block(4, 64, -99, 99, [1, 2, 3, 4])
-    # splice block 2's data block after file 1's (same block_align)
-    d1 = b1[b1.index(b"data") + 8:]
-    d2 = b2[b2.index(b"data") + 8:]
-    merged_file = bytearray(
-        b1[:b1.index(b"data")] + b"data"
-        + struct.pack("<I", len(d1) + len(d2)) + d1 + d2)
-    merged_file[4:8] = struct.pack("<I", len(merged_file) - 8)
-    _, merged = decode_wav_msadpcm(bytes(merged_file))
-    _, solo1 = decode_wav_msadpcm(b1)
-    _, solo2 = decode_wav_msadpcm(b2)
-    assert merged == solo1 + solo2
-
-
-def test_msadpcm_rejects_garbage_and_corrupt_header():
-    from nlp_lib_spark.operators.mediacodec import (
-        build_wav_msadpcm_block, decode_wav_msadpcm)
-    with pytest.raises(ValueError):
-        decode_wav_msadpcm(b"RIFFxxxxAVI LIST")
-    with pytest.raises(ValueError):
-        build_wav_msadpcm_block(7, 16, 0, 0, [0, 0])  # predictor > 6
-    with pytest.raises(ValueError):
-        build_wav_msadpcm_block(0, 16, 0, 0, [1, 2, 3])  # odd nibbles
-    blob = bytearray(build_wav_msadpcm_block(0, 16, 0, 0, [0, 0]))
-    blob[blob.index(b"data") + 8] = 9  # block predictor index past table
-    with pytest.raises(ValueError):
-        decode_wav_msadpcm(bytes(blob))
-
-
-def test_msadpcm_synth_matches_oracle_model_and_dispatch():
-    """synth_msadpcm_payload decodes to exactly the md5-driven two-tap
-    machine the DuckDB oracle replays, and decode_audio/real_features
-    dispatch the 0x0002 fmt tag to the MS-ADPCM path."""
-    import hashlib
-
-    from nlp_lib_spark.operators.mediacodec import (_ms_decode_nibble,
-                                                    MS_COEF1, MS_COEF2,
-                                                    decode_audio,
-                                                    real_features,
-                                                    synth_msadpcm_payload)
-    text = "the cat sat on the mat"
-    payload = synth_msadpcm_payload(text)
-    assert len(payload) == 113  # the gate oracle's n_bytes constant
-    rate, dec = decode_audio(payload)
-    b = hashlib.md5((text + ":m").encode()).digest()
-    c1, c2 = MS_COEF1[b[0] % 7], MS_COEF2[b[0] % 7]
-    delta = 16 + (b[1] * 256 + b[2]) % 30000
-    s1 = b[3] * 256 + b[4] - 32768
-    s2 = b[5] * 256 + b[6] - 32768
-    exp = [s2, s1]
-    for c in hashlib.md5(text.encode()).hexdigest():
-        pred, delta = _ms_decode_nibble(int(c, 16), s1, s2, delta, c1, c2)
-        s2, s1 = s1, pred
-        exp.append(pred)
-    assert (rate, dec) == (8000, exp)
-    feats = real_features(payload)
-    assert feats[:5] == [8000.0, 34.0, float(min(exp)), float(max(exp)),
-                         float(sum(abs(v) for v in exp))]
-    assert feats[5:] == [float(v) for v in exp[:16]]
 
 
 # ------------------------------------------------------- animated GIF

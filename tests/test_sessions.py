@@ -14,7 +14,6 @@ import datetime as dt
 import random
 import shutil
 import tempfile
-import time
 
 import pytest
 
@@ -41,7 +40,7 @@ def _py_sessions(rows, gap_s):
     return sorted(out)
 
 
-def _rand_rows(seed: int, n: int):
+def _rand_rows(seed: int, n: int, base: dt.datetime = BASE):
     rng = random.Random(seed)
     rows = []
     for _ in range(n):
@@ -50,7 +49,7 @@ def _rand_rows(seed: int, n: int):
         # boundaries; duplicates allowed
         off = rng.choice([0, 1, 59, 60, 1799, 1800, 1801, 3600,
                           7200, 7201]) + rng.randrange(5) * 1800
-        rows.append((conv, BASE + dt.timedelta(seconds=off)))
+        rows.append((conv, base + dt.timedelta(seconds=off)))
     return rows
 
 
@@ -88,25 +87,23 @@ def test_sessionize_rejects_bad_gap(spark):
         sessionize(df, gap_seconds=0)
 
 
-def test_streaming_drain_equals_batch(spark):
-    from pyspark.sql import functions as F
+def _post_2035_decade_rows():
+    """After 2035 and spanning more than ten years: a fixed far-future
+    flush date or a fixed watermark delay drops these sessions."""
+    base = dt.datetime(2036, 3, 1)
+    far = dt.timedelta(days=11 * 366)
+    return (_rand_rows(7, 40, base)
+            + [(c, ts + far) for c, ts in _rand_rows(8, 30, base)])
 
-    from nlp_lib_spark.streaming.ingest import (SESSION_FLUSH_CONV,
-                                                run_stream_sessions_once)
-    rows = _rand_rows(7, 60)
+
+def _check_drain_equals_batch(spark, rows):
+    from nlp_lib_spark.streaming.ingest import run_stream_sessions_once
     df = spark.createDataFrame(rows, "conv_id string, ts timestamp")
     batch = sorted((r.conv_id, r.session_start, r.session_end, r.n_turns)
                    for r in sessionize(df).collect())
     d = tempfile.mkdtemp(prefix="sess_test_")
     try:
         df.repartition(3).write.mode("overwrite").parquet(d)
-        for sentinel in ("2035-01-01 00:00:00", "2035-01-01 01:00:00"):
-            time.sleep(1.1)
-            (spark.createDataFrame([(SESSION_FLUSH_CONV,)],
-                                   "conv_id string")
-             .select("conv_id",
-                     F.lit(sentinel).cast("timestamp").alias("ts"))
-             .coalesce(1).write.mode("append").parquet(d))
         out = run_stream_sessions_once(
             spark, d, query_name="sess_test_q")
         got = sorted((r.conv_id, r.session_start, r.session_end,
@@ -115,3 +112,11 @@ def test_streaming_drain_equals_batch(spark):
     finally:
         shutil.rmtree(d, ignore_errors=True)
     assert got == batch
+
+
+def test_streaming_drain_equals_batch(spark):
+    _check_drain_equals_batch(spark, _rand_rows(7, 60))
+
+
+def test_streaming_drain_equals_batch_post_2035_decade(spark):
+    _check_drain_equals_batch(spark, _post_2035_decade_rows())
